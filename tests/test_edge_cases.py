@@ -483,41 +483,21 @@ def test_bench_regress_floor_adjusted_s_tier(tmp_path):
     assert code == 1 and out["n_floor_adjusted"] == 0
 
 
-def test_row_count_matches_footer_and_handles_layouts(spark, sf_dir, tmp_path):
-    """tables.row_count must return the exact fixture row count from
-    parquet footers (single-file AND directory layouts) without a Spark
-    job, and degrade to None on junk paths — it sizes range-partition
-    widths, so a wrong count would mis-shape rank shuffles silently."""
-    from toy_map_reduce_spark.tables import load, row_count
+def test_relation_cache_miss_evicts_other_applications(spark, sf_dir):
+    """tables._RELATION_CACHE is bounded to the live application: a miss
+    drops every entry keyed on another application id, so a long-lived
+    process that cycles sessions does not keep their relations alive."""
+    from toy_map_reduce_spark import tables
 
-    n = row_count(sf_dir, "lineitem")
-    assert n == load(spark, sf_dir, "lineitem").count()
+    app = spark.sparkContext.applicationId
+    for k in [k for k in tables._RELATION_CACHE if "nation" in k[1]]:
+        del tables._RELATION_CACHE[k]  # force the load below to miss
+    foreign = ("app-foreign-0000", "/nowhere/region.parquet", None)
+    tables._RELATION_CACHE[foreign] = None
 
-    # directory-of-part-files layout (how Spark itself writes tables)
-    load(spark, sf_dir, "region").write.mode("overwrite").parquet(
-        str(tmp_path / "region.parquet")
-    )
-    assert row_count(str(tmp_path), "region") == load(
-        spark, sf_dir, "region"
-    ).count()
-
-    # junk paths -> None, never an exception
-    assert row_count("/nonexistent", "lineitem") is None
-    assert row_count(str(tmp_path), "no_such_table") is None
-
-    # a zero-length part file left by an aborted write must not break or
-    # inflate the count (r8 advisor)
-    (tmp_path / "region.parquet" / "part-99999-stale.parquet").touch()
-    assert row_count(str(tmp_path), "region") == load(
-        spark, sf_dir, "region"
-    ).count()
-
-    # hive-partitioned (nested-subdir) layout: the top-level glob finds
-    # no part files -> None, the documented safe fallback
-    load(spark, sf_dir, "region").write.mode("overwrite").partitionBy(
-        "r_regionkey"
-    ).parquet(str(tmp_path / "region_part.parquet"))
-    assert row_count(str(tmp_path), "region_part") is None
+    tables.load(spark, sf_dir, "nation")
+    assert foreign not in tables._RELATION_CACHE
+    assert all(k[0] == app for k in tables._RELATION_CACHE)
 
 
 def test_bench_regress_boot_note_and_adjudication(tmp_path, monkeypatch, capsys):

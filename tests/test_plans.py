@@ -607,6 +607,41 @@ def test_global_order_queries_are_range_partitioned(spark, sf_dir):
             )
 
 
+def test_rank_builders_launch_no_spark_jobs(spark, sf_dir):
+    """Query builders are pure: constructing the DataFrame runs no Spark
+    job (no count() to size the range shuffle; the stamped persist inside
+    with_global_order stays lazy until the query runs). Tables are loaded
+    first: Spark's parquet schema inference is a job, which the session's
+    relation cache (tables.load) pays once per table, not per query."""
+    from toy_map_reduce_spark.functions.ranks import release_scratch
+    from toy_map_reduce_spark.tables import load
+
+    for table in ("orders", "lineitem", "documents", "events"):
+        load(spark, sf_dir, table)
+    sc = spark.sparkContext
+    launched = {}
+    try:
+        for name in (
+            "orders_pareto_abc",
+            "orders_gini",
+            "orders_rfm",
+            "shard_assign",
+            "pack_sequences",
+            "pipeline_curriculum_order",
+            "agg_weighted",
+            "events_session_copresence",
+        ):
+            group = f"build:{name}"
+            sc.setJobGroup(group, group)
+            get_spec(name).builder(spark, sf_dir)
+            launched[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_scratch()
+    assert all(not jobs for jobs in launched.values()), launched
+
+
 def test_bfs_levels_builds_from_frontier_side(spark, sf_dir):
     """Iterative-join broadcast discipline (r7 BFS fix, graph.py): every
     frontier-expansion join and visited anti-join must hash-build from

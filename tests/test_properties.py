@@ -452,16 +452,23 @@ def test_global_order_primitive_matches_naive_windows(spark):
         .over(Window.partitionBy("g").orderBy("v", "id").rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias("cw_grp"),
     )
-    mine = with_global_order(
-        df, [F.col("v"), F.col("id")], rn_col="rn", n_col="n", totals={"tot": "w"}, parts=5
-    )
-    mine = mine.withColumn("band", ntile_from_rn(F.col("rn"), F.col("n"), 7))
-    mine = with_global_order(
-        mine, [F.col("v").desc(), F.col("id")], cumsums={"cw_desc": "w"}, parts=5
-    )
-    mine = with_global_order(
-        mine, [F.col("v"), F.col("id")], part_cols=["g"], cumsums={"cw_grp": "w"}, parts=5
-    )
+    # the primitive ranks at the session's shuffle width, fixed when it
+    # builds: pin 5 so the offsets genuinely stitch several pids together
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        mine = with_global_order(
+            df, [F.col("v"), F.col("id")], rn_col="rn", n_col="n", totals={"tot": "w"}
+        )
+        mine = mine.withColumn("band", ntile_from_rn(F.col("rn"), F.col("n"), 7))
+        mine = with_global_order(
+            mine, [F.col("v").desc(), F.col("id")], cumsums={"cw_desc": "w"}
+        )
+        mine = with_global_order(
+            mine, [F.col("v"), F.col("id")], part_cols=["g"], cumsums={"cw_grp": "w"}
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     j = naive.alias("a").join(mine.alias("b"), "id")
     assert j.count() == 997
@@ -478,12 +485,12 @@ def test_global_order_primitive_matches_naive_windows(spark):
     # degenerate inputs: a filter can hand the primitive 0 or 1 rows at
     # some scale factor — it must stay well-formed, not crash or drop
     empty = with_global_order(
-        df.where(F.lit(False)), [F.col("v"), F.col("id")], rn_col="rn", n_col="n", parts=5
+        df.where(F.lit(False)), [F.col("v"), F.col("id")], rn_col="rn", n_col="n"
     )
     assert empty.count() == 0 and {"rn", "n"} <= set(empty.columns)
     one = with_global_order(
         df.limit(1), [F.col("v"), F.col("id")], rn_col="rn", n_col="n",
-        cumsums={"cw": "w"}, parts=5,
+        cumsums={"cw": "w"},
     ).collect()
     assert len(one) == 1 and one[0].rn == 1 and one[0].n == 1
 
@@ -497,13 +504,13 @@ def test_global_order_primitive_matches_naive_windows(spark):
         assert sdf.where(F.col("band") != F.col("want")).count() == 0, (n, k)
 
 
-def test_with_global_order_name_validation_and_parts_for(spark):
+def test_with_global_order_name_validation(spark):
     """r6 advisor: scratch-name collisions must be rejected at entry, not
-    silently mis-wired; parts_for keeps its floor/cap contract."""
+    silently mis-wired."""
     import pytest
     from pyspark.sql import functions as F
 
-    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     df = spark.createDataFrame([(1, 2.0)], "id long, w double")
 
@@ -526,14 +533,6 @@ def test_with_global_order_name_validation_and_parts_for(spark):
     # duplicate output names
     with pytest.raises(ValueError, match="duplicate output names"):
         with_global_order(df, [F.col("id")], rn_col="x", n_col="x")
-
-    # parts_for: ceil(n/rows_per_part), floored at 2 (1 partition would
-    # plan as Exchange SinglePartition), capped at shuffle.partitions
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert parts_for(0, spark) == 2
-    assert parts_for(100, spark) == 2
-    assert parts_for((1 << 16) * 3, spark) == min(3, cap)
-    assert parts_for(10**12, spark) == cap
 
 
 def test_soundex_cross_engine_fuzz(spark):

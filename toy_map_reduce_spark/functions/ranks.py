@@ -9,13 +9,14 @@ several engine queries need a global order (Pareto/ABC, Gini, RFM ntiles,
 shard assignment, sequence packing). The shape here is the classic
 range-partitioned rank, exact and fully distributed:
 
-1. ``repartitionByRange(P, keys)`` — a distributed sort shuffle: rows land
-   range-clustered, partition i wholly precedes partition i+1 in the
-   requested order. The EXPLICIT partition count matters: AQE never
-   re-coalesces a user-specified numPartitions, so the partition ids are
-   stable for both consumers below.
-2. Stamp ``spark_partition_id()`` and persist: pids become frozen data and
-   the two passes below share one materialization.
+1. ``repartitionByRange(P, keys)`` at P = ``spark.sql.shuffle.partitions``
+   — a distributed sort shuffle: rows land range-clustered, partition i
+   wholly precedes partition i+1 in the requested order. The width is the
+   session's; callers pass no size and run no job to learn one.
+2. Stamp ``spark_partition_id()`` and persist: the persisted stamp freezes
+   the pids as data, so both consumers below (the offsets and the local
+   ranks) see the same pids and share one materialization. This persist
+   is a correctness condition, not a speed-up.
 3. A per-(group, pid) count/sum aggregate — P rows per group — prefix-
    summed over pid order. This is the only single-partition window in the
    plan and it runs over the P-row aggregate, never the corpus.
@@ -38,7 +39,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "with_global_order",
     "ntile_from_rn",
-    "parts_for",
     "register_scratch",
     "release_scratch",
 ]
@@ -58,11 +58,14 @@ _SCRATCH: list[DataFrame] = []
 
 def register_scratch(df: DataFrame) -> DataFrame:
     """Enroll a caller-persisted DataFrame in the rank-scratch lifecycle:
-    it is unpersisted by the next release_scratch(). Operators that
-    persist their own pre-rank aggregates (orders_rfm's customer frame,
-    the doc-grain sized frames) use this instead of reaching into the
-    private list, so every consumer that honors the lifecycle (bench.py,
-    bench_subset.py, the parity sweeps) releases their scratch too.
+    it is unpersisted by the next release_scratch(), by every consumer
+    that honors the lifecycle (bench.py, bench_subset.py, the parity
+    sweeps). The rank builders persist nothing of their own. The two
+    callers each keep a persist that a same-session A/B showed winning:
+    tokenize_bpe_apply's word-frequency cache, which its iterative merge
+    loop re-reads (operators/textstats.py), and events_session_copresence's
+    presence table, which three branches of its plan read
+    (operators/analytics.py).
 
     Enrollment boundary (r7 A/B): enroll ONLY frames private to one
     query's rank pass. Staging tables that other queries in the same
@@ -87,28 +90,6 @@ def release_scratch() -> int:
             pass  # session already stopped — nothing to release
     _SCRATCH.clear()
     return n
-
-
-def parts_for(n_rows: int, spark, rows_per_part: int = 1 << 16) -> int:
-    """Size-aware range-partition count for with_global_order.
-
-    The default ``parts`` (spark.sql.shuffle.partitions) is right for
-    corpus-grain inputs, but a post-aggregate frame (customer / part
-    grain) ranked into 32 range partitions pays ~32 tasks of fixed
-    stage overhead per pass for a few thousand rows — the toy-scale tax
-    the r6 verdict measured on orders_rfm/gini/pareto. Callers that
-    already know their input's cardinality (a persisted aggregate they
-    count anyway) pass ``parts_for(n, spark)``: ceil(n / rows_per_part)
-    partitions, floored at 2 and capped at shuffle.partitions. The cap
-    keeps the 100 TB shape — on a real cluster shuffle.partitions is
-    sized to the executor fleet, and a 10^9-row aggregate saturates it —
-    while a 10^4-row frame collapses to a handful of range partitions.
-    The floor is 2, not 1: Spark plans ``repartitionByRange(1, ...)`` as
-    ``Exchange SinglePartition``, which erases the RangePartitioning
-    shape the plan tests pin (and that a 100 TB reader should see).
-    """
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(2, min(cap, -(-int(n_rows) // rows_per_part)))
 
 
 _SCRATCH_PREFIXES = ("_s_", "_off_", "_tot_", "_loc_")
@@ -164,7 +145,6 @@ def with_global_order(
     cumsums: dict[str, str] | None = None,
     totals: dict[str, str] | None = None,
     n_col: str | None = None,
-    parts: int | None = None,
 ) -> DataFrame:
     """Add exact global-order columns to ``df`` without a global sort.
 
@@ -176,14 +156,14 @@ def with_global_order(
     cumsums:    {out: src} inclusive running sums of ``src``.
     totals:     {out: src} whole-group sums of ``src`` (broadcast-attached).
     n_col:      whole-group row count (for ntile-style banding).
+
+    The range shuffle is ``spark.sql.shuffle.partitions`` wide.
     """
     part_cols = list(part_cols or [])
     cumsums = cumsums or {}
     totals = totals or {}
     _validate_names(df, rn_col, cumsums, totals, n_col)
-    spark = df.sparkSession
-    if parts is None:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     rp = df.repartitionByRange(parts, *[F.col(c) for c in part_cols] + list(order_cols))
     stamped = rp.withColumn("_pid", F.spark_partition_id()).persist(

@@ -443,25 +443,17 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     injective, so ties still break only on custkey — the repo-wide total
     -order contract the DuckDB oracle shares). A custkey-grain pivot
     (conditional agg, one hash shuffle) reassembles the score triple. The
-    range-partition count is size-aware (parts_for): the aggregate is
-    counted once off its persisted cache, so a 10^4-customer frame ranks
-    in a couple of partitions while a 10^9-customer feed still fans to
-    the full shuffle width. The same count doubles as the ntile group
-    size (every metric ranks all n customers), so the primitive's
-    whole-group totals subtree is skipped entirely."""
-    from toy_map_reduce_spark.functions.ranks import (
-        ntile_from_rn, parts_for, register_scratch, with_global_order,
-    )
+    ntile group size is the primitive's n_col: every metric ranks all n
+    customers, and the count rides the offsets' window pass, so the
+    builder itself runs no Spark job."""
+    from toy_map_reduce_spark.functions.ranks import ntile_from_rn, with_global_order
 
     orders = load(spark, sf_dir, "orders")
-    rfm = register_scratch(
-        orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.max("o_orderdate").alias("last_order"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round("o_totalprice", 2)).alias("monetary"),
-        ).persist()
+    rfm = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.max("o_orderdate").alias("last_order"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.round("o_totalprice", 2)).alias("monetary"),
     )
-    n_cust = rfm.count()  # materializes the cache; sizes the range shuffle
     melted = rfm.select(
         "custkey",
         "frequency",
@@ -477,9 +469,9 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("value"), F.col("custkey")],
         part_cols=["metric"],
         rn_col="_rn",
-        parts=parts_for(3 * n_cust, spark),
+        n_col="_n_cust",
     )
-    score = ntile_from_rn(F.col("_rn"), F.lit(n_cust), 4)
+    score = ntile_from_rn(F.col("_rn"), F.col("_n_cust"), 4)
     scored = ranked.groupBy("custkey").agg(
         F.first("frequency").alias("frequency"),
         F.max(F.when(F.col("metric") == "r", score)).alias("r_score"),
@@ -649,25 +641,18 @@ def orders_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer aggregate — no single-task sort, so the plan holds at
     10^9 customers, not just at |customers| << |orders|. Class boundaries
     compare cum*10 ≤ total*8 in BIGINT cents, so no float share can flip
-    a customer's class cross-engine. The range-shuffle width is sized to
-    the aggregate's actual cardinality (parts_for over a persisted count)
-    so the toy-scale frame doesn't pay 32 partitions of fixed overhead."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    a customer's class cross-engine."""
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     orders = load(spark, sf_dir, "orders")
-    cust = register_scratch(
-        orders.groupBy("o_custkey").agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_cents")
-        ).persist()
+    cust = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_cents")
     )
     ranked = with_global_order(
         cust,
         [F.col("rev_cents").desc(), F.col("o_custkey")],
         cumsums={"cum_cents": "rev_cents"},
         totals={"total_cents": "rev_cents"},
-        parts=parts_for(cust.count(), spark),
     )
     return ranked.select(
         "o_custkey",
@@ -920,21 +905,15 @@ def orders_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/ranks.py) — no single-task sort even at 10^9 customers.
     All sums are exact BIGINTs; only the final normalization divides, and
     the floored micro-int can't flip because both engines divide the same
-    exact integers. Range-shuffle width sized to the aggregate's counted
-    cardinality (parts_for), same rationale as orders_pareto_abc."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    exact integers."""
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     orders = load(spark, sf_dir, "orders")
-    cust = register_scratch(
-        orders.groupBy("o_custkey").agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("cents")
-        ).where(F.col("cents").isNotNull()).persist()
-    )
+    cust = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("cents")
+    ).where(F.col("cents").isNotNull())
     ranked = with_global_order(
         cust, [F.col("cents"), F.col("o_custkey")], rn_col="i",
-        parts=parts_for(cust.count(), spark),
     ).select("cents", "i")
     sums = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1986,8 +1965,12 @@ def events_session_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonicalize equal. Persisting the distinct (session, type) table
     # (bounded: sessions x types, far smaller than events) computes the
     # stack once (r14, guide §2.4/§5; same-session ABAB at sf0.1:
-    # 0.83 -> 0.77 s min, medians 1.11 -> 0.93). Scratch-enrolled, so
-    # every harness releases it per query — no cross-query reuse.
+    # 0.83 -> 0.77 s min, medians 1.11 -> 0.93). Re-checked against the
+    # lazy variant, same session, 8 alternations, local[4]: sf0.1 medians
+    # 1.06 s persisted vs 1.46 s lazy (persist faster in 7 of 8 pairs);
+    # sf0.01 a wash (0.54 vs 0.53 s over 6). Kept. Persisting is lazy, so
+    # the builder still runs no job. Scratch-enrolled, so every harness
+    # releases it per query — no cross-query reuse.
     from toy_map_reduce_spark.functions.ranks import register_scratch
 
     present = register_scratch(

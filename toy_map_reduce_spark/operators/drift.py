@@ -339,40 +339,32 @@ def agg_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative weight is below half either way). So the corpus pass is
     one map-side-combined groupBy to the distinct-value table, and the
     range-partitioned rank (functions/ranks.py) runs over THAT — the
-    range shuffle is bounded by |distinct prices|, not |lineitem|, and
-    the partition count is sized from the fact table's parquet FOOTER
-    row count (tables.row_count — a driver-side metadata read, no Spark
-    job), which upper-bounds the aggregate's cardinality. Per-flag
-    totals ride with_global_order's totals= path (a second aggregate of
-    the tiny per-pid table), so no join back to the fact side at all.
+    range shuffle is bounded by |distinct prices|, not |lineitem|, at the
+    session's shuffle width. Per-flag totals ride with_global_order's
+    totals= path (the offsets' window pass over the tiny per-pid table),
+    so no join back to the fact side at all.
     This is the stat_mann_whitney / stat_auc distinct-value pattern
     (stats.py) applied to the weighted median.
 
     Measured (sf0.1, local[32], quiet-warm): 2.29 s (r7 fact-feed rank)
-    -> ~1.8 s, and the plan reaches its warm shape on PASS 2 (~1.8 s)
-    where the persist+count() variant needed 3-4 passes (~1.5 s floor
-    but 2.9-3.6 s on early passes — worse under the 2-pass bench
-    regime, which is why the footer count replaced it). TPC-H caps the
-    local win — l_extendedprice is quantity x retailprice, so
-    (flag, price) is 594,330 distinct vs ~600,572 fact rows at sf0.1
-    (~1% compression); on a real corpus with repeated values the rank
-    input shrinks proportionally, which is the 100 TB point."""
-    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
-    from toy_map_reduce_spark.tables import row_count
+    -> ~1.8 s. TPC-H caps the local win — l_extendedprice is quantity x
+    retailprice, so (flag, price) is 594,330 distinct vs ~600,572 fact
+    rows at sf0.1 (~1% compression); on a real corpus with repeated
+    values the rank input shrinks proportionally, which is the 100 TB
+    point."""
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     li = load(spark, sf_dir, "lineitem")
     vals = li.groupBy("l_returnflag", "l_extendedprice").agg(
         F.sum("l_quantity").alias("w"),
         F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("pw"),
     )
-    n_upper = row_count(sf_dir, "lineitem")
     cum = with_global_order(
         vals,
         [F.col("l_extendedprice")],
         part_cols=["l_returnflag"],
         cumsums={"cw": "w"},
         totals={"w_total": "w", "pw_sum": "pw"},
-        parts=parts_for(n_upper, spark) if n_upper else None,
     )
     return (
         cum.where(2 * F.col("cw") >= F.col("w_total"))

@@ -153,22 +153,15 @@ GROUP BY 1
 def shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size-desc rank is a distributed range-partitioned row_number
     (functions/ranks.py) — the corpus-grain global order that would
-    otherwise be the classic single-task sort at 100 TB. The sized frame
-    (2 ints per doc — tiny even at corpus doc counts) is persisted and
-    counted: one tokenization pass feeds both the range sampler and the
-    shuffle, and the count sizes the shuffle width (parts_for) so a toy
-    corpus doesn't pay the full fixed partition scaffold."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    otherwise be the classic single-task sort at 100 TB. The builder is
+    pure: the primitive's own stamped persist is the one materialization,
+    at the session's shuffle width."""
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     docs = load(spark, sf_dir, "documents")
-    sized = register_scratch(
-        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens")).persist()
-    )
+    sized = docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens"))
     ranked = with_global_order(
         sized, [F.col("n_tokens").desc(), F.col("doc_id").asc()], rn_col="rn",
-        parts=parts_for(sized.count(), spark),
     )
     return (
         ranked.select(((F.col("rn") - 1) % 8).cast("int").alias("shard"), "n_tokens")
@@ -397,19 +390,13 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The global running offset is a distributed range-partitioned
     running sum (functions/ranks.py) — doc_id-ordered, exact, and never a
     single-task window even at corpus grain. Deterministic: ordering is
-    by doc_id, never by arrival. The sized frame is persisted + counted
-    (one tokenization pass, size-aware shuffle width — see shard_assign)."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    by doc_id, never by arrival. Pure builder, like shard_assign."""
+    from toy_map_reduce_spark.functions.ranks import with_global_order
 
     docs = load(spark, sf_dir, "documents")
-    sized = register_scratch(
-        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens")).persist()
-    )
+    sized = docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens"))
     placed = with_global_order(
         sized, [F.col("doc_id").asc()], cumsums={"_cum": "n_tokens"},
-        parts=parts_for(sized.count(), spark),
     ).withColumn("start_off", F.col("_cum") - F.col("n_tokens"))
     return (
         placed.select(
@@ -680,26 +667,19 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt. The quartile bands are an exact distributed rank + the
     uneven-remainder ntile formula (functions/ranks.py) — corpus-grain,
     so a single-task ntile window would be the 100 TB bottleneck. The
-    difficulty frame is persisted + counted (one tokenization pass,
-    size-aware shuffle width, literal group size — see shard_assign)."""
-    from toy_map_reduce_spark.functions.ranks import (
-        ntile_from_rn, parts_for, register_scratch, with_global_order,
-    )
+    group size is the primitive's n_col, so the builder runs no job."""
+    from toy_map_reduce_spark.functions.ranks import ntile_from_rn, with_global_order
 
-    docs = register_scratch(
-        load(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
-            .alias("difficulty"),
-        ).persist()
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
+        .alias("difficulty"),
     )
-    n_docs = docs.count()
     banded = with_global_order(
-        docs, [F.col("difficulty"), F.col("doc_id")], rn_col="_rn",
-        parts=parts_for(n_docs, spark),
+        docs, [F.col("difficulty"), F.col("doc_id")], rn_col="_rn", n_col="_n_docs",
     ).select(
         "doc_id", "difficulty",
-        ntile_from_rn(F.col("_rn"), F.lit(n_docs), CURRICULUM_BANDS).alias("band"),
+        ntile_from_rn(F.col("_rn"), F.col("_n_docs"), CURRICULUM_BANDS).alias("band"),
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#epoch0")))
         .alias("shuffle_key"),
     )

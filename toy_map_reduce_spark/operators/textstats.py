@@ -980,7 +980,9 @@ def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min-of-4 — documents is 5k rows locally, so the recomputed pass is
     # free); the point is the asymptote: `words` is VOCAB-sized while
     # its recompute is a CORPUS-sized explode+groupBy, i.e. the old code
-    # paid one extra full corpus pass per run at scale.
+    # paid one extra full corpus pass per run at scale. Re-measured with
+    # scripts/bpe_apply_abab.py --alts=6 at sf0.1, local[4]: keep 1.59 s
+    # median vs unpersist 1.77 s, keep faster in all 6 pairs. Kept.
     #
     # Leak surface (r13 advisor): a caller that drives this builder via
     # __spark_entry__.queries() directly and never calls

@@ -72,44 +72,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def row_count(sf_dir: str, name: str) -> int | None:
-    """Exact row count of a fixture table from its parquet FOOTER — a
-    driver-side metadata read (sub-millisecond), no Spark job. Used to
-    size range-partition widths (functions/ranks.parts_for) when the
-    frame being ranked is derived from one table and the table's row
-    count is a usable upper bound on the frame's cardinality: it saves
-    the persist + count() action a size-aware rank otherwise pays, which
-    in a 2-pass bench regime is the difference between converging to the
-    warm plan on pass 2 and never reaching it.
-
-    Directory layouts (r8 advisor): only Spark-named ``part-*.parquet``
-    files count (falling back to ``*.parquet`` for single-file-in-dir
-    fixtures), and zero-length leftovers from an aborted write are
-    skipped — stale part files must not inflate the partition sizing.
-    Returns None when the path isn't a plain parquet file/dir, INCLUDING
-    hive-partitioned (nested-subdir) layouts, whose files the top-level
-    glob deliberately misses — the caller falls back to counting or to
-    the shuffle-partitions default, which is always safe (parts_for caps
-    the effect to partition sizing)."""
-    import glob as _glob
-
-    try:
-        import pyarrow.parquet as pq
-
-        p = table_path(sf_dir, name)
-        if os.path.isdir(p):
-            parts = _glob.glob(os.path.join(p, "part-*.parquet")) or _glob.glob(
-                os.path.join(p, "*.parquet")
-            )
-            parts = [f for f in parts if os.path.getsize(f) > 0]
-            if not parts:
-                return None
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in parts)
-        return pq.ParquetFile(p).metadata.num_rows
-    except Exception:
-        return None
-
-
 def _layout_cache_root() -> str:
     env = os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "")
     if env and env != "off":
@@ -198,7 +160,9 @@ def _read_path(sf_dir: str, name: str) -> str:
 # rows, no results; every action still computes from the parquet
 # files), keyed on (application, resolved path, file size+mtime_ns) so
 # a new session, a different sf_dir, a refreshed fixture, or a layout-
-# cache toggle each get a fresh relation.
+# cache toggle each get a fresh relation. A miss also evicts every entry
+# of another application, so a long-lived process that cycles sessions
+# holds at most one session's relations; a hit pays nothing extra.
 _RELATION_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -238,6 +202,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # DeduplicateRelations handles the shared underlying relation
         # exactly as it does for any df.join(df) self-join.
         return cached.toDF(*cached.columns)
+    for stale in [k for k in _RELATION_CACHE if k[0] != key[0]]:
+        del _RELATION_CACHE[stale]
     if name == "events":
         from pyspark.sql import functions as F
 
